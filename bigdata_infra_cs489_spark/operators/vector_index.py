@@ -26,19 +26,22 @@ directory layout, no metastore needed):
   the query, with the embedding stored in-bucket so reranking needs no
   join back to the corpus.
 
-The index path is keyed on the source parquet's (size, mtime), so a
-regenerated fixture triggers a rebuild instead of serving stale buckets.
+The index path is keyed by ``sources.assets.asset_dir``, so a
+regenerated fixture, a quantizer or banding change, or a version bump
+triggers a rebuild instead of serving stale buckets.
 At cluster scale the same layout works unchanged on any shared
 filesystem; rebuilds are one broadcast-join pass over the corpus.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.assets import asset_dir, build_once
 from .similarity import (
     LSH_BAND_BITS,
     LSH_N_BANDS,
@@ -54,91 +57,70 @@ from .similarity import (
     lsh_codes,
 )
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-INDEX_ROOT = os.environ.get(
-    "SPARK_GRAFT_INDEX_DIR", os.path.join(_REPO_ROOT, "spark-warehouse")
-)
+# Bump on ANY change to the layouts' builders (assignment rule, LSH
+# code packing, partition columns).
+VECTOR_INDEX_VERSION = 1
 
 
 def vector_index_path(sf_dir: str) -> str:
-    """Deterministic index location for one fixture directory, keyed on
-    the embeddings parquet's (size, mtime_ns): fixture regeneration
-    changes the key, so probes can never read buckets built from a
-    previous generation of the data."""
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    sig = f"{st.st_size}_{st.st_mtime_ns}"
-    label = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        INDEX_ROOT,
-        f"vecidx_{label}_{sig}_c{N_CENTROIDS}_h{N_HYPERPLANES}",
+    """Index location for one data generation: the embeddings parquet's
+    signature plus the quantizer sizes and the LSH banding, which shape
+    the ivf buckets and the (band, band_val) layout."""
+    from . import similarity as S
+
+    return asset_dir(
+        "vecidx",
+        sf_dir,
+        "embeddings",
+        f"c{S.N_CENTROIDS}_h{S.N_HYPERPLANES}b{S.LSH_BAND_BITS}",
+        version=VECTOR_INDEX_VERSION,
     )
 
 
-def write_vector_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Build both index layouts in one pass each over the corpus.
+def ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
+    """Build each layout this data generation doesn't have yet; returns
+    the index directory.
 
     IVF assignment is the zero-shuffle literal-argmax column of
     ``ivf_assignments`` computed inline on the scan (no join; the only
     exchange is the partitioned write's re-cluster on the C-valued
     partition column). The LSH side explodes each code into its
     LSH_N_BANDS (band, band_val) rows — the deliberate replication that
-    makes every band a self-contained hash table."""
+    makes every band a self-contained hash table. Both layouts share one
+    embeddings load."""
     from .similarity import _centroid_rows, _nearest_centroid_col
 
-    emb = _emb(spark, sf_dir)
-    cents = _centroid_rows(spark, sf_dir, N_CENTROIDS)
-    (
-        emb.select(
-            "vec_id",
-            "embedding",
-            _nearest_centroid_col(cents).alias("centroid_id"),
-        )
-        .repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(path, "ivf"))
-    )
-    banded = lsh_bands(lsh_codes(spark, sf_dir, N_HYPERPLANES)).select(
-        "vec_id", "band", "band_val"
-    )
-    (
-        emb.join(banded, "vec_id")
-        .repartition("band", "band_val")
-        .write.mode("overwrite")
-        .partitionBy("band", "band_val")
-        .parquet(os.path.join(path, "lsh"))
-    )
-
-
-def ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the index iff this data generation doesn't have one yet.
-    The _SUCCESS-gated check makes a torn previous build rebuild.
-
-    The build lands in a private temp directory and publishes per-subdir
-    through the shared atomic-rename helper — the round-10 parallel
-    sweep caught the previous direct ``mode("overwrite")`` into the
-    FINAL path racing against a concurrent prober (two callers both see
-    a missing _SUCCESS, both overwrite the same directory, and a reader
-    mid-scan gets a torn layout): the exact publish race the round-9
-    advisory flagged on the dedup index, which this module had too."""
-    import shutil
-    import uuid
-
-    from .dedup import _publish_subdir
-
     path = vector_index_path(sf_dir)
-    if not all(
-        os.path.exists(os.path.join(path, sub, "_SUCCESS"))
-        for sub in ("ivf", "lsh")
-    ):
-        tmp = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        write_vector_index(spark, sf_dir, tmp)
-        os.makedirs(path, exist_ok=True)
-        for sub in ("ivf", "lsh"):
-            _publish_subdir(os.path.join(tmp, sub), os.path.join(path, sub))
-        shutil.rmtree(tmp, ignore_errors=True)
+    emb = functools.cache(lambda: _emb(spark, sf_dir))
+
+    def write_ivf(tmp: str) -> None:
+        cents = _centroid_rows(spark, sf_dir, N_CENTROIDS)
+        (
+            emb()
+            .select(
+                "vec_id",
+                "embedding",
+                _nearest_centroid_col(cents).alias("centroid_id"),
+            )
+            .repartition("centroid_id")
+            .write.partitionBy("centroid_id")
+            .parquet(tmp)
+        )
+
+    def write_lsh(tmp: str) -> None:
+        banded = lsh_bands(lsh_codes(spark, sf_dir, N_HYPERPLANES)).select(
+            "vec_id", "band", "band_val"
+        )
+        (
+            emb()
+            .join(banded, "vec_id")
+            .repartition("band", "band_val")
+            .write.partitionBy("band", "band_val")
+            .parquet(tmp)
+        )
+
+    build_once(os.path.join(path, "ivf"), write_ivf)
+    build_once(os.path.join(path, "lsh"), write_lsh)
     return path
 
 
@@ -157,7 +139,7 @@ def append_to_vector_index(
     Concurrency note: appends are file-additive (existing files are
     never touched), so a probe racing an append sees a consistent
     PREFIX of the index — eventual-consistency ingest semantics, unlike
-    the all-or-nothing _SUCCESS-gated publish of the base build. A
+    the all-or-nothing publish of the base build. A
     deployment needing snapshot-isolated probes layers a table format
     (manifest-committed file sets) on top; single-writer-many-reader is
     the contract here.

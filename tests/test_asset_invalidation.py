@@ -31,6 +31,7 @@ def _all_asset_paths(sf_dir: str) -> dict[str, str]:
     from bigdata_infra_cs489_spark.operators.curate import curate_manifest_path
     from bigdata_infra_cs489_spark.operators.dedup import dedup_index_path
     from bigdata_infra_cs489_spark.operators.dsir import dsir_scores_path
+    from bigdata_infra_cs489_spark.operators.index import term_index_path
     from bigdata_infra_cs489_spark.operators.similarity import (
         KMEANS_ITERATIONS,
         N_CENTROIDS,
@@ -53,6 +54,7 @@ def _all_asset_paths(sf_dir: str) -> dict[str, str]:
         "bpe_vocab": bpe_vocab_path(sf_dir),
         "kmeans_model": kmeans_model_path(sf_dir, N_CENTROIDS, KMEANS_ITERATIONS),
         "vector_index": vector_index_path(sf_dir),
+        "term_index": term_index_path(sf_dir),
     }
 
 
@@ -75,9 +77,11 @@ def test_version_bump_forces_rebuild(tmp_path, monkeypatch):
         curate,
         dedup,
         dsir,
+        index,
         similarity,
         spans,
         text_analytics,
+        vector_index,
     )
 
     sf_dir = _touch_fixtures(tmp_path)
@@ -91,6 +95,8 @@ def test_version_bump_forces_rebuild(tmp_path, monkeypatch):
         (text_analytics, "LM_SCORES_VERSION", "lm_scores"),
         (bpe, "BPE_VOCAB_VERSION", "bpe_vocab"),
         (similarity, "KMEANS_MODEL_VERSION", "kmeans_model"),
+        (vector_index, "VECTOR_INDEX_VERSION", "vector_index"),
+        (index, "TERM_INDEX_VERSION", "term_index"),
     ):
         monkeypatch.setattr(mod, const, getattr(mod, const) + 1)
         assert _all_asset_paths(sf_dir)[key] != before[key], (
@@ -129,3 +135,17 @@ def test_curate_plan_constants_are_keyed(tmp_path, monkeypatch):
     assert curate.curate_manifest_path(sf_dir) != before
     monkeypatch.undo()
     assert curate.curate_manifest_path(sf_dir) == before
+
+
+def test_lsh_banding_is_keyed(tmp_path, monkeypatch):
+    """Re-banding the LSH codes rewrites the (band, band_val) layout, so
+    it must move the vector index key: a probe must never read buckets
+    banded under another LSH_BAND_BITS."""
+    from bigdata_infra_cs489_spark.operators import similarity
+
+    sf_dir = _touch_fixtures(tmp_path)
+    before = _all_asset_paths(sf_dir)
+    monkeypatch.setattr(similarity, "LSH_BAND_BITS", similarity.LSH_BAND_BITS * 2)
+    after = _all_asset_paths(sf_dir)
+    assert after["vector_index"] != before["vector_index"]
+    assert {k for k in before if before[k] != after[k]} == {"vector_index"}

@@ -340,76 +340,3 @@ def test_standing_dedup_index_is_write_once(spark, sf_smoke):
     before = [os.stat(m).st_mtime_ns for m in markers]
     incremental_dedup_assign(spark, sf_smoke).collect()  # probe: no rebuild
     assert [os.stat(m).st_mtime_ns for m in markers] == before
-
-
-def test_publish_subdir_race_semantics(tmp_path):
-    """The round-9 advisory on ensure_dedup_index's fallback, pinned:
-    a dst that already carries _SUCCESS always stands (the publisher's
-    copy is discarded, never the published dir); a TORN dst is replaced;
-    a rename race that loses to a concurrent complete publish is treated
-    as success instead of raising."""
-    import os
-
-    from bigdata_infra_cs489_spark.operators.dedup import _publish_subdir
-
-    def build(name: str, marker: bool, payload: str) -> str:
-        d = tmp_path / name
-        d.mkdir()
-        (d / "part-0").write_text(payload)
-        if marker:
-            (d / "_SUCCESS").write_text("")
-        return str(d)
-
-    # 1. complete dst stands: src discarded, dst payload untouched
-    src = build("src1", True, "loser")
-    dst = build("dst1", True, "winner")
-    _publish_subdir(src, dst)
-    assert (tmp_path / "dst1" / "part-0").read_text() == "winner"
-    assert os.path.exists(src)  # caller's rmtree(tmp) cleans the temp root
-
-    # 2. torn dst (no _SUCCESS) is replaced by the complete build
-    src = build("src2", True, "fresh")
-    dst = build("dst2", False, "torn")
-    _publish_subdir(src, dst)
-    assert (tmp_path / "dst2" / "part-0").read_text() == "fresh"
-    assert os.path.exists(tmp_path / "dst2" / "_SUCCESS")
-
-    # 3. missing dst: plain publish
-    src = build("src3", True, "new")
-    _publish_subdir(src, str(tmp_path / "dst3"))
-    assert (tmp_path / "dst3" / "part-0").read_text() == "new"
-
-
-def test_publish_subdir_toctou_complete_copy_survives(tmp_path, monkeypatch):
-    """The round-13 advisory, pinned: if dst COMPLETES between the
-    _SUCCESS re-check and the move-aside rename (the racer finishes at
-    exactly that instant), the moved-aside dir is a complete copy a
-    reader may already have resolved — it must be published back, never
-    rmtree'd. Simulated deterministically by a rename wrapper that drops
-    _SUCCESS into dst at the move-aside call."""
-    import os
-
-    from bigdata_infra_cs489_spark.operators.dedup import _publish_subdir
-
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "part-0").write_text("loser")
-    (src / "_SUCCESS").write_text("")
-    dst = tmp_path / "dst"
-    dst.mkdir()  # torn at probe time: data, no _SUCCESS yet
-    (dst / "part-0").write_text("racer")
-
-    real_rename = os.rename
-
-    def racing_rename(a, b):
-        if str(a) == str(dst) and ".torn-" in str(b):
-            (dst / "_SUCCESS").write_text("")  # the racer completes NOW
-        real_rename(a, b)
-
-    monkeypatch.setattr(os, "rename", racing_rename)
-    _publish_subdir(str(src), str(dst))
-    # the racer's complete copy stands at dst — republished, not deleted
-    assert (dst / "part-0").read_text() == "racer"
-    assert os.path.exists(dst / "_SUCCESS")
-    # and no stray torn directory leaks next to it
-    assert [p for p in os.listdir(tmp_path) if ".torn-" in p] == []

@@ -123,15 +123,6 @@ def test_observed_stats_match_aggregate(spark, sf_smoke):
     assert obs.get == want
 
 
-def test_partition_graph_layout_and_content(spark, sf_smoke):
-    from bigdata_infra_cs489_spark.operators.graph import build_graph, partition_graph
-
-    g = build_graph(spark, sf_smoke)
-    p = partition_graph(g, 4)
-    assert p.rdd.getNumPartitions() == 4
-    assert sorted(r["id"] for r in p.collect()) == sorted(r["id"] for r in g.collect())
-
-
 @pytest.mark.parametrize("name", ["degree_distribution", "triangle_count"])
 def test_graph_analytics_match_oracle(spark, sf_correct, name):
     import __spark_entry__ as entrymod
