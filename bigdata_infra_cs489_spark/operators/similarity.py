@@ -96,13 +96,16 @@ def _dot(a: Column, b: Column) -> Column:
 # and the cross-engine oracle hashes).
 
 
-def _dlit(x: float) -> str:
+def _dlit(x: float | None) -> str:
     """SQL DOUBLE literal that parses to exactly this IEEE double.
 
     Non-finite guard (round-15 advisory): repr() yields 'nan'/'inf',
     which the SQL parser rejects as literals — emit the CAST spelling
     instead so a NaN/Inf in a model vector builds the same column
-    F.lit() used to produce rather than a ParseException."""
+    F.lit() used to produce rather than a ParseException. A None (a
+    null array element of a query vector) is a typed DOUBLE null."""
+    if x is None:
+        return "CAST(NULL AS DOUBLE)"
     x = float(x)
     if x != x:
         return "CAST('NaN' AS DOUBLE)"
@@ -139,29 +142,44 @@ def _cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
+def _cosine_rerank(
+    spark: SparkSession, cands: DataFrame, qvec: list[float] | None, k: int
+) -> DataFrame:
+    """The ONE exact rerank behind every vector top-k: (vec_id, cosine)
+    of the k (vec_id, embedding) candidates nearest the query vector —
+    cosine rounded to 6dp, descending, ties to the lowest vec_id; the
+    empty (vec_id, cosine) frame when the query id is absent (qvec None).
+
+    The query vector is a plan literal (see the _dlit block), so the
+    rerank is a projection on the candidate scan feeding
+    TakeOrderedAndProject: no second embeddings scan for the query row
+    and no join. The expression is _cosine's fold with the literal in
+    the query's place — the same tree, so the doubles are unchanged."""
+    if qvec is None:
+        return spark.createDataFrame([], "vec_id bigint, cosine double")
+    q = _arr_dlit(qvec)
+    cos = F.expr(
+        f"({_dot_sql('embedding', q)})"
+        f" / (SQRT({_dot_sql('embedding', 'embedding')}) * SQRT({_dot_sql(q, q)}))"
+    )
+    return (
+        cands.select("vec_id", F.round(cos, 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(k)
+    )
+
+
 def cosine_topk(
     spark: SparkSession,
     sf_dir: str,
     query_vec_id: int = QUERY_VEC_ID,
     k: int = TOP_K,
 ) -> DataFrame:
-    """Exact top-k by cosine against the query vector (brute force).
-
-    The query vector is a 1-row broadcast (crossJoin of a broadcast side is
-    a BroadcastNestedLoopJoin with 1 row — effectively map-side)."""
+    """Exact top-k by cosine against the query vector (brute force): one
+    narrow scan of the corpus scored against the query as a plan
+    literal (_cosine_rerank)."""
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
-    return (
-        emb.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _cosine_rerank(spark, emb, query_embedding(emb, query_vec_id), k)
 
 
 def _model_rows(
@@ -307,7 +325,7 @@ def cluster_balanced_sample(
 
 
 def _rank_centroids_local(
-    cents: list[tuple[int, list[float]]], qvec: list[float], nprobe: int
+    cents: list[tuple[int, list[float]]], qvec: list[float] | None, nprobe: int
 ) -> list[int]:
     """The ONE probe rule every IVF variant shares: rank centroids by
     cosine to the query (desc, centroid_id tie-break), return the
@@ -321,8 +339,12 @@ def _rank_centroids_local(
     (left-to-right fp64 adds; math.sqrt is correctly rounded like JVM
     Math.sqrt; IEEE multiply is commutative), the _nearest_centroid_col
     cnorm precedent. Ordering mirrors Spark's double sort (NaN greatest
-    -> first under DESC; -0.0 == 0.0 ties fall to the id)."""
+    -> first under DESC; -0.0 == 0.0 ties fall to the id). An absent
+    query (qvec None) probes nothing."""
     import math
+
+    if qvec is None:
+        return []
 
     def dot(a, b):
         acc = 0.0
@@ -343,19 +365,6 @@ def _rank_centroids_local(
         )
     )
     return [cid for cid, _ in scored[:nprobe]]
-
-
-def probe_centroid_ids(cent_df: DataFrame, q: DataFrame, nprobe: int) -> list[int]:
-    """DataFrame adapter over _rank_centroids_local for callers holding
-    (centroid_id, cvec) / single-row (q) frames rather than collected
-    model rows. Same rule, same ordering."""
-    qrows = q.limit(1).collect()
-    if not qrows:
-        return []
-    cents = [
-        (int(r["centroid_id"]), list(r["cvec"])) for r in cent_df.collect()
-    ]
-    return _rank_centroids_local(cents, list(qrows[0]["q"]), nprobe)
 
 
 def query_embedding(emb: DataFrame, query_vec_id: int) -> list | None:
@@ -382,28 +391,16 @@ def ivf_topk(
     """ANN top-k: rank only vectors assigned to the query's top-nprobe
     centroids. Deterministic; the oracle replicates the same probe rule.
 
-    Plan shape: centroid ranking is a C-row Spark job (same fold
-    arithmetic as the assignment expression) whose nprobe winners are
-    collected as a scalar id list; the probe itself is then ONE narrow
-    scan — inline argmax assignment + literal IN filter + rerank —
+    Plan shape: one collect brings the centroids and the query vector
+    to the driver, which ranks the centroids (_rank_centroids_local);
+    the probe is then ONE narrow scan — inline argmax assignment +
+    literal IN filter + rerank against the query as a plan literal —
     with zero joins and zero shuffles before the final top-k."""
     emb = _emb(spark, sf_dir)
     cents, qvec = _model_rows(spark, sf_dir, n_centroids, query_vec_id)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
-    probed = (
-        _rank_centroids_local(cents, qvec, nprobe) if qvec is not None else []
-    )
-    return (
-        emb.where(_nearest_centroid_col(cents).isin(probed))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    probed = _rank_centroids_local(cents, qvec, nprobe)
+    return _cosine_rerank(
+        spark, emb.where(_nearest_centroid_col(cents).isin(probed)), qvec, k
     )
 
 
@@ -687,6 +684,25 @@ def lsh_bands(codes: DataFrame) -> DataFrame:
     )
 
 
+def _query_band_vals(hmat, qvec: list[float] | None) -> list[int]:
+    """The query's LSH_N_BANDS band values, band-ascending, computed
+    driver-side with the same float64 matmul and bit packing as
+    lsh_codes_for and the same split as lsh_bands (a 1-row model-sized
+    computation); [] when the query id is absent. The one owner of the
+    query-side banding for the scan (lsh_topk) and indexed
+    (vector_index.lsh_topk_indexed) probes."""
+    import numpy as np
+
+    if qvec is None:
+        return []
+    bits = (np.asarray(qvec, dtype=np.float64) @ hmat.T) > 0
+    qcode = int(
+        (bits.astype(np.int64) * (np.int64(1) << np.arange(hmat.shape[0]))).sum()
+    )
+    mask = (1 << LSH_BAND_BITS) - 1
+    return [(qcode >> (b * LSH_BAND_BITS)) & mask for b in range(LSH_N_BANDS)]
+
+
 def lsh_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -695,57 +711,35 @@ def lsh_topk(
 ) -> DataFrame:
     """ANN top-k via banded sign-LSH: candidates are vectors sharing at
     least one of the LSH_N_BANDS band values with the query's code; exact
-    cosine reranks the candidates. The third ANN family next to brute
-    force (exactness baseline) and IVF (partition-probe): LSH needs no
-    trained structure and its candidate generation is a pure equi-join on
-    (band, band_value) — at 100 TB that's one shuffle of narrow
-    (vec_id, band, value) rows against a handful of query band rows
-    (broadcast), never a distance computation outside the candidate set.
+    cosine reranks the candidates against the query as a plan literal
+    (_cosine_rerank). The third ANN family next to brute force
+    (exactness baseline) and IVF (partition-probe): LSH needs no trained
+    structure and its candidate generation is a band-value match with
+    literal query bands — never a distance computation outside the
+    candidate set.
     """
     import numpy as np
 
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
-    # the query's band values are computed driver-side from the same
-    # hyperplane matrix and same float64 matmul as lsh_codes (a 1-row
-    # model-sized computation) — referencing the distributed codes subtree
-    # a second time would re-run the whole Python scan just to read one row.
     # One _model_rows collect serves both the hyperplanes and the query
-    # row; the codes table reuses the same matrix via lsh_codes_for.
-    hrows, qrow = _model_rows(spark, sf_dir, N_HYPERPLANES, query_vec_id)
+    # vector: the query's band values (_query_band_vals) and its rerank
+    # literal are driver-side, so the distributed codes subtree is read
+    # once, by the candidate filter; the codes table reuses the same
+    # matrix via lsh_codes_for.
+    hrows, qvec = _model_rows(spark, sf_dir, N_HYPERPLANES, query_vec_id)
     hmat = np.array([v for _, v in hrows], dtype=np.float64)
     codes = lsh_codes_for(spark, emb, hmat)
-    qvec = np.asarray(qrow, dtype=np.float64)
-    bits = (qvec @ hmat.T) > 0
-    qcode = int(
-        (bits.astype(np.int64) * (np.int64(1) << np.arange(hmat.shape[0]))).sum()
-    )
-    # "shares >= 1 band with the query" as a plain OR-of-equalities column
+    # "shares >= 1 band with the query" as a plain OR-of-equalities
     # predicate over the packed code — same scheme lsh_bands materializes,
     # but with no explode, no join and no distinct: the candidate filter is
     # a narrow scan of the (vec_id, code) table
     mask = (1 << LSH_BAND_BITS) - 1
-    cond = None
-    for b in range(LSH_N_BANDS):
-        qval = (qcode >> (b * LSH_BAND_BITS)) & mask
-        c = (
-            F.expr(f"shiftright(code, {b * LSH_BAND_BITS}) & {mask}")
-            == F.lit(qval)
-        )
-        cond = c if cond is None else (cond | c)
-    cand = codes.where(cond).select("vec_id")
-    return (
-        emb.join(cand, "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    cond = " OR ".join(
+        f"(shiftright(code, {b * LSH_BAND_BITS}) & {mask}) = {v}"
+        for b, v in enumerate(_query_band_vals(hmat, qvec))
     )
+    cand = codes.where(cond or "false").select("vec_id")
+    return _cosine_rerank(spark, emb.join(cand, "vec_id"), qvec, k)
 
 
 def semantic_dedup_keep_best(
@@ -1346,22 +1340,10 @@ def ivf_topk_trained(
         key=lambda t: t[0],
     )
     emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
     qvec = query_embedding(emb, query_vec_id)
-    probed = (
-        _rank_centroids_local(cents, qvec, nprobe) if qvec is not None else []
-    )
-    return (
-        emb.where(_nearest_centroid_col(cents).isin(probed))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    probed = _rank_centroids_local(cents, qvec, nprobe)
+    return _cosine_rerank(
+        spark, emb.where(_nearest_centroid_col(cents).isin(probed)), qvec, k
     )
 
 

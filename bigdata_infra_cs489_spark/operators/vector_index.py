@@ -43,14 +43,12 @@ from pyspark.sql import functions as F
 
 from ..sources.assets import asset_dir, build_once
 from .similarity import (
-    LSH_BAND_BITS,
-    LSH_N_BANDS,
     N_CENTROIDS,
     N_HYPERPLANES,
     N_PROBE,
     QUERY_VEC_ID,
     TOP_K,
-    _cosine,
+    _cosine_rerank,
     _emb,
     _hyperplanes,
     lsh_bands,
@@ -187,33 +185,26 @@ def ivf_topk_indexed(
     """ANN top-k probing the MATERIALIZED IVF buckets: identical results
     to ``ivf_topk`` (same probe rule, same oracle), but the corpus-wide
     assignment happened once at build time — the probe reads only the
-    ``nprobe`` pruned partitions. The centroid ranking is an
-    O(C)-row job over the raw table (vec_id < C pushes into the scan) and
-    its result is a literal IN-filter, so pruning is static, visible in
-    the plan, and needs no dynamic-partition-pruning machinery."""
+    ``nprobe`` pruned partitions. One O(C)-row collect over the raw
+    table (vec_id < C pushes into the scan) brings the centroids and the
+    query vector to the driver; the ranked centroids become a literal
+    IN-filter, so pruning is static, visible in the plan, and needs no
+    dynamic-partition-pruning machinery. The rerank scores the bucket
+    rows against the query as a plan literal (_cosine_rerank)."""
     from .similarity import _model_rows, _rank_centroids_local
 
     path = ensure_vector_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
     cents, qvec = _model_rows(spark, sf_dir, N_CENTROIDS, query_vec_id)
-    probed = (
-        _rank_centroids_local(cents, qvec, nprobe) if qvec is not None else []
-    )
     idx = spark.read.parquet(os.path.join(path, "ivf")).where(
-        F.col("centroid_id").isin(probed)
+        F.col("centroid_id").isin(_rank_centroids_local(cents, qvec, nprobe))
     )
-    return (
-        idx.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    return _cosine_rerank(
+        spark,
+        idx.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+        ),
+        qvec,
+        k,
     )
 
 
@@ -224,48 +215,31 @@ def lsh_topk_indexed(
     k: int = TOP_K,
 ) -> DataFrame:
     """ANN top-k probing the MATERIALIZED banded-LSH hash tables:
-    identical results to ``lsh_topk``. The query's band values are a
-    driver-side model-sized computation (same float64 matmul as the
-    build); each (band, band_val) pair is one literal partition filter,
-    so the scan touches LSH_N_BANDS directories out of
-    LSH_N_BANDS * 2^LSH_BAND_BITS. Candidates arriving from several bands
-    dedupe on vec_id before the rerank; embeddings come from the bucket
-    itself — no join back to the corpus."""
+    identical results to ``lsh_topk``. One model-sized collect brings
+    the hyperplanes and the query vector to the driver, which derives
+    the query's band values (_query_band_vals); each (band, band_val)
+    pair is one literal partition filter, so the scan touches
+    LSH_N_BANDS directories out of LSH_N_BANDS * 2^LSH_BAND_BITS.
+    Candidates arriving from several bands dedupe on vec_id before the
+    rerank, which scores them against the query as a plan literal
+    (_cosine_rerank); embeddings come from the bucket itself — no join
+    back to the corpus."""
     import numpy as np
 
-    from .similarity import _model_rows
+    from .similarity import _model_rows, _query_band_vals
 
     path = ensure_vector_index(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q")
-    )
-    hrows, qrow = _model_rows(spark, sf_dir, N_HYPERPLANES, query_vec_id)
+    hrows, qvec = _model_rows(spark, sf_dir, N_HYPERPLANES, query_vec_id)
     hmat = np.array([v for _, v in hrows], dtype=np.float64)
-    qvec = np.asarray(qrow, dtype=np.float64)
-    bits = (qvec @ hmat.T) > 0
-    qcode = int(
-        (bits.astype(np.int64) * (np.int64(1) << np.arange(hmat.shape[0]))).sum()
+    cond = " OR ".join(
+        f"(band = {b} AND band_val = {v})"
+        for b, v in enumerate(_query_band_vals(hmat, qvec))
     )
-    mask = (1 << LSH_BAND_BITS) - 1
-    cond = None
-    for b in range(LSH_N_BANDS):
-        qval = (qcode >> (b * LSH_BAND_BITS)) & mask
-        c = (F.col("band") == b) & (F.col("band_val") == qval)
-        cond = c if cond is None else (cond | c)
-    idx = spark.read.parquet(os.path.join(path, "lsh")).where(cond)
+    idx = spark.read.parquet(os.path.join(path, "lsh")).where(cond or "false")
     cand = idx.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).dropDuplicates(["vec_id"])
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(_cosine(F.col("embedding"), F.col("q")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _cosine_rerank(spark, cand, qvec, k)
 
 
 def ivfpq_topk_indexed(

@@ -14,6 +14,8 @@ SIM = [
     "lsh_codes",
     "lsh_topk",
     "semantic_search",
+    "ivf_topk_indexed",
+    "lsh_topk_indexed",
 ]
 
 
@@ -24,6 +26,35 @@ def test_matches_oracle(spark, sf_correct, name):
     q = entrymod.queries()[name]
     sql = entrymod.oracle_sql()[name]
     assert_matches_oracle(q(spark, sf_correct), sql, sf_correct)
+
+
+# every top-k entry point that reranks by exact cosine against a query id
+RERANK_ENTRY_POINTS = [
+    "cosine_topk",
+    "ivf_topk",
+    "lsh_topk",
+    "ivf_topk_trained",
+    "semantic_search",
+    "ivf_topk_indexed",
+    "lsh_topk_indexed",
+]
+
+
+@pytest.mark.parametrize("name", RERANK_ENTRY_POINTS)
+def test_absent_query_id_is_empty_with_normal_schema(spark, sf_smoke, name):
+    """A query id that is not in the table yields an empty result with
+    the schema a present id gets, never an exception."""
+    from bigdata_infra_cs489_spark.operators import similarity as S
+    from bigdata_infra_cs489_spark.operators import vector_index as VI
+
+    fn = getattr(VI if name.endswith("_indexed") else S, name)
+    absent = fn(spark, sf_smoke, query_vec_id=10**9)
+    assert absent.collect() == []
+
+    def shape(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    assert shape(absent) == shape(fn(spark, sf_smoke))
 
 
 def test_query_vector_ranks_first(spark, sf_correct):
@@ -491,7 +522,9 @@ def test_dlit_nonfinite_parses_to_the_ieee_value(spark):
         F.expr(_dlit(float("inf"))).alias("p"),
         F.expr(_dlit(float("-inf"))).alias("m"),
         F.expr(_dlit(0.30000000000000004)).alias("f"),
+        F.expr(_dlit(None)).alias("z"),
     ).collect()[0]
+    assert row.z is None
     assert math.isnan(row.n)
     assert row.p == float("inf")
     assert row.m == float("-inf")
